@@ -536,15 +536,9 @@ class BoundCatalog:
         (PorcupineTree.hs:602-613); unmapped sink => no-op (dead-sink
         pruning, VirtualFileAccess.hs:309-313). Returns written paths."""
         ds = self.catalog[name]
-        if not ds.writable:
-            raise ValueError(f"{name!r} is a source (NoWrite)")
-        locs = self._bound[name]
-        if locs is None:
-            return []  # dead sink: skip (laziness does the rest)
         written = []
-        for loc in locs:
+        for loc, path in zip(self._bound[name] or [], self.write_paths(name, variables)):
             serial = ds.serials.for_ext(loc.ext)
-            path = self._splice(loc.path, variables)
             t0 = time.perf_counter()
             acc = accessor_for(path)
             if acc is not None:
@@ -558,6 +552,13 @@ class BoundCatalog:
             _access_log.info("Wrote '%s' in %.3fs", path, time.perf_counter() - t0)
             written.append(path)
         return written
+
+    def write_paths(self, name: str, variables: dict | None = None) -> list[str]:
+        """The paths ``write`` writes, one per layer, without writing;
+        ``[]`` for an unmapped (dead) sink."""
+        if not self.catalog[name].writable:
+            raise ValueError(f"{name!r} is a source (NoWrite)")
+        return [self._splice(loc.path, variables) for loc in self._bound[name] or []]
 
     def show_tree(
         self,

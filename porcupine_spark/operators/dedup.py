@@ -377,8 +377,30 @@ def minhash_lsh_pairs(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame
     anyway), surfacing as ``<col>_a`` / ``<col>_b`` — consumers that
     need doc attributes per pair (e.g. cross_source_dup_matrix) get
     them WITHOUT re-joining the corpus by doc id (optimization r8,
-    guide §2.4: each such join was one more doc-keyed exchange chain)."""
+    guide §2.4: each such join was one more doc-keyed exchange chain).
+    Raises ValueError for a repeated ``carry`` name or one that collides
+    with an output or internal column."""
     return _minhash_lsh_pairs_and_sigs(docs, carry)[0]
+
+
+# output and scratch columns of the verification join; a carried
+# column of the same name would be silently shadowed or made ambiguous
+_LSH_PAIR_COLS = frozenset({"doc_id", "doc_a", "doc_b", "jaccard", "arr", "arr_a", "arr_b", "th"})
+
+
+def _check_carry(carry: tuple[str, ...]) -> None:
+    dup = sorted({c for c in carry if carry.count(c) > 1})
+    if dup:
+        raise ValueError(f"minhash_lsh_pairs: carry names {dup} are repeated")
+    names = set(carry)
+    produced = {f"{c}{side}" for c in carry for side in ("_a", "_b")}
+    clash = (names & _LSH_PAIR_COLS) | (produced & (_LSH_PAIR_COLS | names))
+    if clash:
+        raise ValueError(
+            f"minhash_lsh_pairs: carry names give columns {sorted(clash)} that collide "
+            f"with its output/scratch columns {sorted(_LSH_PAIR_COLS)} or with "
+            f"another carried column — rename them before the call"
+        )
 
 
 def _minhash_lsh_pairs_and_sigs(
@@ -389,6 +411,7 @@ def _minhash_lsh_pairs_and_sigs(
     signatures (minhash_estimator_calibration) reuses the materialized
     pass instead of recomputing the full md5 scan (within ONE query
     build; nothing crosses runs)."""
+    _check_carry(carry)
     # per-row signatures (no shuffle); checkpoint so the band SELF-join
     # (two refs) and the candidate join don't recompute the md5 pass
     sigs = minhash_signatures(docs).localCheckpoint(eager=True)
@@ -2281,8 +2304,9 @@ def verbatim_spans_over(
     # the window table is CORPUS-SIZED and downstream of an explode, whose
     # size Catalyst underestimates badly enough to BROADCAST it (measured
     # at 10x: 36.7 s broadcast plan vs 6.5 s shuffled, identical rows) —
-    # pin the scale-correct strategy; the hash join compares co-located
-    # 8-byte keys (no exchange: both sides read the h-partitioned ckpt)
+    # pin the scale-correct strategy; the hash join compares 8-byte keys.
+    # Each side still gets its own Exchange on h: the restored checkpoint
+    # reports UnknownPartitioning (plans/r08/verbatim_span_pairs_after.txt)
     matches = a.join(
         b.hint("shuffle_hash"),
         (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")),

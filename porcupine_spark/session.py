@@ -53,11 +53,26 @@ _DEFAULTS = {
 }
 
 
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+# the directory holding this package: Python workers unpickle UDFs that
+# reference porcupine_spark modules, and a worker only finds the package
+# on its own when it happens to start in that directory
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _with_package_path(user_path: str | None) -> str:
+    parts = [p for p in (user_path or "").split(os.pathsep) if p]
+    return os.pathsep.join(parts if _PACKAGE_PARENT in parts else [*parts, _PACKAGE_PARENT])
+
+
 def get_spark(app_name: str = "porcupine_spark", **overrides: str) -> SparkSession:
     """Build (or fetch) the session.
 
     ``SPARK_GRAFT_CPUS`` selects local parallelism (default ``*``).
-    Keyword overrides are applied last, so tests can pin any knob.
+    Keyword overrides are applied last, so tests can pin any knob; a
+    ``spark.executorEnv.PYTHONPATH`` override is kept, with the
+    package's parent directory appended so Python workers can import
+    the package from any working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
@@ -72,6 +87,7 @@ def get_spark(app_name: str = "porcupine_spark", **overrides: str) -> SparkSessi
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     )
     conf.update({k: str(v) for k, v in overrides.items()})
+    conf[_WORKER_PATH] = _with_package_path(conf.get(_WORKER_PATH))
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -9,10 +9,43 @@ of dataset names it may read/write and (b) a runner ``(RunCtx, input)
 unions requirements — a data-dependent resource acquisition is
 impossible to express, exactly as in the reference.
 
-The runner manipulates lazy DataFrames: "running" a pipeline builds
-Spark plans; only terminal writes/collects trigger execution (the
-reference's dead-sink pruning becomes Spark laziness + the explicit
-unmapped-sink skip in BoundCatalog.write).
+Execution model: build, then write.
+
+- The runner manipulates lazy DataFrames: "running" a pipeline builds
+  Spark plans. Reads, cache hits and puts, and any eager action an
+  operator takes (checkpoints, collects) happen as the runner reaches
+  them, on the calling thread, in composition order — the *build
+  phase*.
+- Every sink write goes through ``RunCtx.submit``. Outside a batch it
+  runs at once. Inside a batch it is deferred to the batch's *write
+  phase*, and the task returns the paths it will write.
+- ``fanout`` / ``both`` open a batch when their static requirements
+  say the branches are independent: the combined reads do not overlap
+  the combined writes, and the two branches do not write the same
+  dataset. The outermost such combinator owns the batch; nested ones
+  add their writes to it. When its build phase ends, the batch's
+  writes run concurrently (``functions/concurrent.run_concurrently``),
+  so independent sinks share the cores instead of queueing. A fanout
+  whose branches depend on each other (one loads what the other
+  writes) runs sequentially with immediate writes, as a plain
+  sequence would.
+- A write to a path that already has a pending write first finishes
+  the batch, so repeated writes to one dataset keep their order.
+- Barriers: ``io_task`` (and ``task_ext``'s ``try_task``,
+  ``catch_and_log`` and ``clocked``) first finish every pending write,
+  then run their body with batching suspended, so driver-side effects
+  see the data written before them, and caught errors and timings
+  cover exactly the body.
+- Failure: if a deferred write fails, the other writes of the batch
+  still finish, then the first error (in submission order) is raised
+  from ``run_pipeline``. If the build phase itself fails, the writes
+  it already submitted still run — as they would have in sequence —
+  and the build error is raised.
+- ``named`` times the build of its task; deferred writes are not in
+  that figure.
+
+Unmapped sinks are skipped (the reference's dead-sink pruning becomes
+Spark laziness + the explicit unmapped-sink skip in BoundCatalog.write).
 """
 
 from __future__ import annotations
@@ -20,12 +53,13 @@ from __future__ import annotations
 import logging
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import SparkSession
 
 from porcupine_spark.catalog import BoundCatalog
+from porcupine_spark.functions.concurrent import run_concurrently
 
 logger = logging.getLogger("porcupine_spark")
 
@@ -33,23 +67,47 @@ logger = logging.getLogger("porcupine_spark")
 @dataclass
 class RunCtx:
     """The reader environment (PTaskState analog, PTask/Internal.hs:84-88):
-    session + bound catalog + logging namespace + repetition variables."""
+    session + bound catalog + logging namespace + repetition variables.
+    ``pending`` is the open batch's deferred writes, shared by every
+    context derived inside it; ``None`` means writes run at once."""
 
     spark: SparkSession
     bound: BoundCatalog
     namespace: tuple[str, ...] = ()
     variables: dict[str, Any] = field(default_factory=dict)
     cache: Any = None  # optional cache.CacheStore
+    pending: list | None = None  # [(target paths, write thunk)]
 
     def scoped(self, name: str) -> "RunCtx":
-        return RunCtx(
-            self.spark, self.bound, (*self.namespace, name), dict(self.variables), self.cache
-        )
+        return replace(self, namespace=(*self.namespace, name), variables=dict(self.variables))
 
     def with_vars(self, **vs) -> "RunCtx":
-        return RunCtx(
-            self.spark, self.bound, self.namespace, {**self.variables, **vs}, self.cache
-        )
+        return replace(self, variables={**self.variables, **vs})
+
+    def submit(self, write: Callable[[], Any], targets: list[str]) -> None:
+        """The one path of every sink write: run ``write`` now, or defer
+        it to the open batch's write phase. ``targets`` are the paths it
+        writes; a pending write to any of them is finished first."""
+        if self.pending is None:
+            write()
+            return
+        targets = frozenset(targets)
+        if any(t & targets for t, _ in self.pending):
+            self.flush()
+        self.pending.append((targets, write))
+
+    def flush(self) -> None:
+        """Run the pending writes concurrently and empty the batch. All
+        of them finish before the first failure is raised."""
+        if self.pending:
+            writes = [w for _, w in self.pending]
+            self.pending.clear()
+            run_concurrently(*writes)
+
+    def barrier(self) -> "RunCtx":
+        """Finish the pending writes; the returned context writes at once."""
+        self.flush()
+        return replace(self, pending=None)
 
 
 @dataclass(frozen=True)
@@ -80,22 +138,42 @@ class Task:
 
     __rshift__ = then_
 
+    def _pairwise(self, other: "Task", run_pair, name: str) -> "Task":
+        """Shared body of (***) and (&&&): batch the branches' writes when
+        their static requirements show them independent."""
+        reads, writes = self.reads | other.reads, self.writes | other.writes
+        independent = not (reads & writes) and not (self.writes & other.writes)
+
+        def runner(ctx: RunCtx, x):
+            if not independent or ctx.pending is not None:
+                return run_pair(ctx, x)
+            batch = replace(ctx, pending=[])
+            try:
+                out = run_pair(batch, x)
+            except BaseException:
+                try:
+                    batch.flush()
+                except Exception:  # noqa: BLE001 — the build error is the one raised
+                    logger.exception("deferred writes failed after a build error")
+                raise
+            batch.flush()
+            return out
+
+        return Task(runner, reads, writes, name=name)
+
     def both(self, other: "Task") -> "Task":
         """(***): pairwise parallel — ((a,b)) -> (c,d)."""
-        def runner(ctx: RunCtx, pair):
-            a, b = pair
-            return (self.run(ctx, a), other.run(ctx, b))
-
-        return Task(runner, self.reads | other.reads, self.writes | other.writes,
-                    name=f"({self.name}***{other.name})")
+        return self._pairwise(
+            other, lambda ctx, pair: (self.run(ctx, pair[0]), other.run(ctx, pair[1])),
+            f"({self.name}***{other.name})",
+        )
 
     def fanout(self, other: "Task") -> "Task":
         """(&&&): same input to both — a -> (c,d)."""
-        def runner(ctx: RunCtx, x):
-            return (self.run(ctx, x), other.run(ctx, x))
-
-        return Task(runner, self.reads | other.reads, self.writes | other.writes,
-                    name=f"({self.name}&&&{other.name})")
+        return self._pairwise(
+            other, lambda ctx, x: (self.run(ctx, x), other.run(ctx, x)),
+            f"({self.name}&&&{other.name})",
+        )
 
     def named(self, name: str) -> "Task":
         """nameTask (PTask.hs:129-207): log duration under a namespace."""
@@ -139,8 +217,9 @@ def arr(f: Callable[[Any], Any], name: str = "arr") -> Task:
 
 
 def io_task(f: Callable[[RunCtx, Any], Any], name: str = "io") -> Task:
-    """toTask/ioTask (PTask.hs:100-109,62-64): effectful driver-side step."""
-    return Task(f, name=name)
+    """toTask/ioTask (PTask.hs:100-109,62-64): effectful driver-side step.
+    A barrier: pending writes finish before ``f`` runs."""
+    return Task(lambda ctx, x: f(ctx.barrier(), x), name=name)
 
 
 def load(name: str) -> Task:
@@ -163,11 +242,18 @@ def load_merged(name: str, key: str) -> Task:
     )
 
 
+def _submit_write(ctx: RunCtx, df, resolved: str, mode: str) -> list[str]:
+    paths = ctx.bound.write_paths(resolved, variables=ctx.variables)
+    ctx.submit(
+        lambda: ctx.bound.write(df, resolved, mode=mode, variables=ctx.variables), paths
+    )
+    return paths
+
+
 def write(name: str, mode: str = "overwrite") -> Task:
     """writeData (VirtualFileAccess.hs:126-136): DataFrame -> list[path]."""
     return Task(
-        lambda ctx, df:
-            ctx.bound.write(df, _resolve(ctx, name), mode=mode, variables=ctx.variables),
+        lambda ctx, df: _submit_write(ctx, df, _resolve(ctx, name), mode),
         writes=frozenset({name}),
         name=f"write:{name}",
     )
@@ -175,12 +261,13 @@ def write(name: str, mode: str = "overwrite") -> Task:
 
 def write_eff(name: str, thunk_producer: Callable[[RunCtx], Any], mode: str = "overwrite") -> Task:
     """writeEffData (VirtualFileAccess.hs:141-148): skip *computing* the
-    value when the sink is unmapped."""
+    value when the sink is unmapped. The producer runs at build time;
+    only the write is deferred."""
     def runner(ctx: RunCtx, _):
         resolved = _resolve(ctx, name)
         if not ctx.bound.is_mapped(resolved):
             return []
-        return ctx.bound.write(thunk_producer(ctx), resolved, mode=mode, variables=ctx.variables)
+        return _submit_write(ctx, thunk_producer(ctx), resolved, mode)
 
     return Task(runner, writes=frozenset({name}), name=f"write_eff:{name}")
 

@@ -22,6 +22,19 @@ construct it wants to be:
   computes once.
 - ``try_task`` / ``catch_and_log`` ≙ tryTask/catchAndLog
   (PTask.hs:66-95).
+
+Writes follow the build-then-write model of ``task.py``: ``tee`` and
+``write_partitioned`` submit through ``RunCtx.submit``, so under a
+batching ``fanout``/``both`` they run in the write phase, concurrently
+with the batch's other writes. A ``tee`` is ONE batch entry: it
+persists its frame and builds every sink's plan at build time, then
+writes its sinks in order and unpersists the frame (also on failure)
+in the write phase. Its sinks are not written concurrently with each
+other: every concurrent consumer of a not-yet-filled persisted frame
+would plan its own materialization of it. ``try_task``,
+``catch_and_log`` and ``clocked`` are barriers: they finish the
+pending writes, then run their task with batching suspended, so the
+errors they catch and the time they report are their task's own.
 """
 
 from __future__ import annotations
@@ -95,26 +108,24 @@ def write_partitioned(name: str, idx_col: str, mode: str = "overwrite") -> Task:
     def runner(ctx: RunCtx, df: DataFrame):
         resolved = _resolve(ctx, name)
         ds = ctx.bound.catalog[resolved]
-        locs = ctx.bound.locations(resolved)
-        if locs is None:
-            return []
-        written = []
-        for loc in locs:
+        paths = ctx.bound.write_paths(resolved, variables=ctx.variables)
+        targets = []
+        for loc, path in zip(ctx.bound.locations(resolved) or [], paths):
             serial = ds.serials.for_ext(loc.ext)
-            path = splice_vars(loc.path, {**ctx.bound.variables, **ctx.variables})
-            if serial.pre_write:
-                df2 = serial.pre_write(df)
-            else:
-                df2 = df
-            (
-                df2.write.format(serial.format)
-                .mode(mode)
-                .partitionBy(idx_col)
-                .options(**serial.options)
-                .save(path)
-            )
-            written.append(path)
-        return written
+            targets.append((serial.pre_write(df) if serial.pre_write else df, serial, path))
+
+        def write_all():
+            for out, serial, path in targets:
+                (
+                    out.write.format(serial.format)
+                    .mode(mode)
+                    .partitionBy(idx_col)
+                    .options(**serial.options)
+                    .save(path)
+                )
+
+        ctx.submit(write_all, paths)
+        return paths
 
     return Task(runner, writes=frozenset({name}), name=f"write_partitioned:{name}")
 
@@ -144,20 +155,30 @@ def read_folder(
 
 def tee(*sinks: tuple[str, Callable[[DataFrame], DataFrame] | None]) -> Task:
     """mapCopy: persist the input frame, write it to every (sink,
-    transform) pair, unpersist. Upstream computes ONCE."""
+    transform) pair in order, unpersist. Upstream computes ONCE.
+    Returns {sink: paths}."""
 
     def runner(ctx: RunCtx, df: DataFrame):
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        outs, written = [], {}
         try:
-            written = {}
             for sink_name, transform in sinks:
-                out = transform(df) if transform else df
-                written[sink_name] = ctx.bound.write(
-                    out, _resolve(ctx, sink_name), variables=ctx.variables
-                )
-            return written
-        finally:
+                resolved = _resolve(ctx, sink_name)
+                outs.append((resolved, transform(df) if transform else df))
+                written[sink_name] = ctx.bound.write_paths(resolved, variables=ctx.variables)
+        except BaseException:
             df.unpersist()
+            raise
+
+        def write_all():
+            try:
+                for resolved, out in outs:
+                    ctx.bound.write(out, resolved, variables=ctx.variables)
+            finally:
+                df.unpersist()
+
+        ctx.submit(write_all, [p for paths in written.values() for p in paths])
+        return written
 
     return Task(
         runner, writes=frozenset(s for s, _ in sinks), name=f"tee:{','.join(s for s, _ in sinks)}"
@@ -165,9 +186,11 @@ def tee(*sinks: tuple[str, Callable[[DataFrame], DataFrame] | None]) -> Task:
 
 
 def try_task(task: Task) -> Task:
-    """tryTask (PTask.hs:66-70): a -> ('ok', b) | ('err', exception)."""
+    """tryTask (PTask.hs:66-70): a -> ('ok', b) | ('err', exception).
+    A barrier (see the module docstring)."""
 
     def runner(ctx: RunCtx, x):
+        ctx = ctx.barrier()
         try:
             return ("ok", task.run(ctx, x))
         except Exception as e:  # noqa: BLE001
@@ -177,10 +200,12 @@ def try_task(task: Task) -> Task:
 
 
 def catch_and_log(task: Task, default: Any = None) -> Task:
-    """catchAndLog (PTask.hs:84-95): log the error, continue with default."""
+    """catchAndLog (PTask.hs:84-95): log the error, continue with default.
+    A barrier (see the module docstring)."""
     import logging
 
     def runner(ctx: RunCtx, x):
+        ctx = ctx.barrier()
         try:
             return task.run(ctx, x)
         except Exception:  # noqa: BLE001
@@ -223,10 +248,13 @@ def with_context(task: Task, **context) -> Task:
 
 
 def clocked(task: Task) -> Task:
-    """clockTask (PTask.hs:112-126): a -> (result, wall_seconds)."""
+    """clockTask (PTask.hs:112-126): a -> (result, wall_seconds).
+    A barrier (see the module docstring): the time includes the task's
+    writes and nothing written before it."""
     import time as _time
 
     def runner(ctx: RunCtx, x):
+        ctx = ctx.barrier()
         t0 = _time.perf_counter()
         out = task.run(ctx, x)
         return out, _time.perf_counter() - t0

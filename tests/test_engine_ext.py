@@ -318,3 +318,34 @@ class TestCogroupAPI:
             for r in cogroup_purchase_view_attribution(spark, sf_dir).collect()
         }
         assert via_cogroup == via_window
+
+
+_UDF_QUERY_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from porcupine_spark.plans.registry import load_all_plans
+from porcupine_spark.session import get_spark
+spark = get_spark("udf_cwd", **{"spark.sql.shuffle.partitions": "4"})
+print("rows", load_all_plans()["cosine_topk"].builder(spark, sys.argv[2]).count())
+"""
+
+
+def test_python_udf_query_runs_from_another_cwd(sf_dir, tmp_path):
+    """Python workers import porcupine_spark when the driver runs from a
+    directory that does not hold the package (and no PYTHONPATH names
+    it): get_spark puts the package's parent on the workers' path."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    env.setdefault("SPARK_GRAFT_CPUS", "2")
+    proc = subprocess.run(
+        [sys.executable, "-c", _UDF_QUERY_SCRIPT, repo, os.path.abspath(sf_dir)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "ModuleNotFoundError" not in proc.stderr
+    assert int(proc.stdout.split("rows")[-1]) > 0

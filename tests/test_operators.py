@@ -1426,3 +1426,20 @@ def test_transitivity_planted_triangle(spark, tmp_path):
     assert got.n_wedges == 3
     assert got.n_triangles == 1
     assert got.transitivity_micro == 1000000
+
+
+@pytest.mark.parametrize(
+    "carry",
+    [("source", "source"), ("jaccard",), ("doc",), ("arr",), ("x", "x_a"), ("doc_id",)],
+)
+def test_minhash_carry_rejects_clashing_names(spark, carry):
+    """carry= names that repeat, or that would shadow an output/scratch
+    column (directly or through their <c>_a/<c>_b aliases), fail at the
+    call, before any plan is built."""
+    from porcupine_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d", "s", "s", 0)], "doc_id long, text string, source string, x string, x_a int"
+    )
+    with pytest.raises(ValueError, match="minhash_lsh_pairs"):
+        minhash_lsh_pairs(docs, carry=carry)

@@ -1,12 +1,16 @@
 """Per-index IO, partitioned writes, folder streams, tee, error ops
 (SURVEY §2.1/§2.2 extended family) + stateful streaming equivalence."""
 
+import json
+import time
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
 from porcupine_spark.catalog import Catalog, Dataset
 from porcupine_spark.run import run_pipeline
-from porcupine_spark.task import arr, load
+from porcupine_spark.task import arr, load, write
 from porcupine_spark.task_ext import (
     catch_and_log,
     load_indexed,
@@ -105,6 +109,148 @@ def test_try_task_and_catch_and_log(spark, tmp_path):
     tag2, val = run_pipeline(try_task(arr(lambda x: x + 1)), Catalog([]), spark,
                              root=str(tmp_path), input_=1)
     assert (tag2, val) == ("ok", 2)
+
+
+@contextmanager
+def _job_group(spark, group):
+    """Tag the jobs submitted inside the block (write-phase threads
+    inherit the tag) and yield a getter for their (submitted, completed)
+    epoch-ms times, read from the status store."""
+    sc = spark.sparkContext
+
+    def jobs():
+        time.sleep(0.5)  # a write returns before its job-end event is posted
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty(10_000)
+        mapper = spark._jvm.com.fasterxml.jackson.databind.ObjectMapper()
+        mapper.registerModule(spark._jvm.com.fasterxml.jackson.module.scala.DefaultScalaModule())
+        every = json.loads(mapper.writeValueAsString(jsc.statusStore().jobsList(None)))
+        return sorted(
+            (j["submissionTime"], j["completionTime"]) for j in every if j.get("jobGroup") == group
+        )
+
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _failing_frame(spark):
+    # fails in the executors, i.e. when a write runs, not when it is built
+    return spark.range(4).selectExpr("CASE WHEN id >= 0 THEN raise_error('boom') ELSE id END AS x")
+
+
+def _rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
+def test_fanout_runs_independent_writes_concurrently(spark, tmp_path):
+    """Two independent writing branches write the same files as the
+    branches run one by one, and their write jobs overlap in time."""
+    def frame(mod):
+        return (spark.range(0, 300_000, numPartitions=2)
+                .selectExpr("id", f"sha2(cast(id * {mod} AS string), 512) AS h"))
+
+    cat = Catalog([Dataset.sink("a"), Dataset.sink("b")])
+    left = arr(lambda _: frame(3)) >> write("a")
+    right = arr(lambda _: frame(5)) >> write("b")
+    for branch in (left, right):
+        run_pipeline(branch, cat, spark, root=str(tmp_path / "seq"))
+    with _job_group(spark, "test-batch-overlap") as jobs:
+        out = run_pipeline(left.fanout(right), cat, spark, root=str(tmp_path / "batch"))
+    assert out == ([str(tmp_path / "batch/a.parquet")], [str(tmp_path / "batch/b.parquet")])
+    for name in ("a", "b"):
+        assert _rows(spark, str(tmp_path / f"batch/{name}.parquet")) == _rows(
+            spark, str(tmp_path / f"seq/{name}.parquet")
+        )
+    spans = jobs()
+    assert len(spans) >= 2
+    assert any(s2 < e1 for (_, e1), (s2, _) in zip(spans, spans[1:])), spans
+
+
+def test_dependent_fanout_stays_sequential(spark, tmp_path):
+    """A branch that loads what the other branch writes sees the fresh
+    data: the fanout does not batch, so the write runs first."""
+    mid = str(tmp_path / "mid.parquet")
+    spark.createDataFrame([(0,)], "x long").write.parquet(mid)  # stale content
+    cat = Catalog([Dataset("mid")])
+    produce = arr(lambda _: spark.createDataFrame([(1,), (2,)], "x long")) >> write("mid")
+    consume = load("mid") >> arr(lambda df: sorted(r.x for r in df.collect()))
+    _, seen = run_pipeline(produce.fanout(consume), cat, spark, root=str(tmp_path))
+    assert seen == [1, 2]
+
+
+def test_try_task_and_catch_and_log_catch_a_write_in_a_batch(spark, tmp_path):
+    cat = Catalog([Dataset.sink("bad"), Dataset.sink("good")])
+    bad = arr(lambda _: _failing_frame(spark)) >> write("bad")
+    good = arr(lambda _: spark.range(3)) >> write("good")
+    (tag, err), paths = run_pipeline(try_task(bad).fanout(good), cat, spark,
+                                     root=str(tmp_path / "try"))
+    assert tag == "err" and "boom" in str(err)
+    assert _rows(spark, paths[0]) == [(0,), (1,), (2,)]
+    fallback, paths = run_pipeline(catch_and_log(bad, default="fallback").fanout(good), cat,
+                                   spark, root=str(tmp_path / "catch"))
+    assert fallback == "fallback"
+    assert _rows(spark, paths[0]) == [(0,), (1,), (2,)]
+
+
+def test_failing_deferred_write_raises_and_unpersists_tee_frames(spark, tmp_path):
+    """The other writes of the batch still finish, run_pipeline raises,
+    and no tee frame stays persisted — not even the one whose sink
+    failed."""
+    spark.catalog.clearCache()
+    cat = Catalog([Dataset.sink(n) for n in ("t1", "t2", "t3", "t4")])
+    ok = arr(lambda _: spark.range(5)) >> tee(("t1", None), ("t2", lambda d: d.filter("id > 1")))
+    bad = arr(lambda _: _failing_frame(spark)) >> tee(("t3", None), ("t4", None))
+    with pytest.raises(Exception, match="boom"):
+        run_pipeline(ok.fanout(bad), cat, spark, root=str(tmp_path))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _rows(spark, str(tmp_path / "t1.parquet")) == [(i,) for i in range(5)]
+    assert _rows(spark, str(tmp_path / "t2.parquet")) == [(2,), (3,), (4,)]
+
+
+def test_batch_keeps_order_of_writes_to_one_path(spark, tmp_path):
+    """A second write to a path with a pending write finishes the batch
+    first, so the last write wins as it does in sequence."""
+    cat = Catalog([Dataset.sink("d"), Dataset.sink("o")])
+    twice = (arr(lambda _: spark.range(3)) >> write("d")
+             >> arr(lambda _: spark.range(10, 12)) >> write("d"))
+    other = arr(lambda _: spark.range(1)) >> write("o")
+    run_pipeline(twice.fanout(other), cat, spark, root=str(tmp_path))
+    assert _rows(spark, str(tmp_path / "d.parquet")) == [(10,), (11,)]
+
+
+def test_build_failure_still_runs_submitted_writes(spark, tmp_path):
+    """Writes submitted before the build phase fails still run, as they
+    would have in sequence; the build error is the one raised."""
+    cat = Catalog([Dataset.sink("early")])
+    early = arr(lambda _: spark.range(2)) >> write("early")
+    broken = arr(lambda _: (_ for _ in ()).throw(RuntimeError("build broke")))
+    with pytest.raises(RuntimeError, match="build broke"):
+        run_pipeline(early.fanout(broken), cat, spark, root=str(tmp_path))
+    assert _rows(spark, str(tmp_path / "early.parquet")) == [(0,), (1,)]
+
+
+def test_tee_under_fanout_submits_the_same_jobs(spark, tmp_path):
+    """A tee writes its sinks in order inside its batch entry, so under
+    a fanout it submits exactly the jobs it submits alone."""
+    cat = Catalog([Dataset.sink("j1"), Dataset.sink("j2"), Dataset.sink("o")])
+    def frame(_):  # a shuffle under the persisted frame, as in a real pipeline
+        return spark.range(0, 2000, numPartitions=4).groupBy((F.col("id") % 50).alias("k")).count()
+
+    teed = arr(frame) >> tee(
+        ("j1", None), ("j2", lambda d: d.groupBy(F.col("k") % 5).agg(F.sum("count")))
+    )
+    other = arr(lambda _: spark.range(10)) >> write("o")
+    counts = {}
+    for label, task in (("tee", teed), ("other", other), ("both", teed.fanout(other))):
+        with _job_group(spark, f"test-tee-jobs-{label}") as jobs:
+            run_pipeline(task, cat, spark, root=str(tmp_path / label))
+        counts[label] = len(jobs())
+    assert counts["tee"] >= 2
+    assert counts["both"] == counts["tee"] + counts["other"]
 
 
 def test_stateful_stream_matches_batch(spark, sf_dir):
